@@ -5,7 +5,7 @@
 training-data pipeline ops), each a (spark, sf_dir) -> DataFrame callable.
 `oracle_sql()` — matching ANSI SQL for DuckDB over the same parquet views.
 Queries without an oracle entry are genuinely non-SQL-expressible (the BSP
-crawl loop, bloom/cuckoo tiers, image decode) and get rows-only checks.
+crawl loop, the Bloom tier, image decode) and get rows-only checks.
 
 Column names are aliased identically on both sides; doubles are rounded on
 both sides; timestamps are reduced to epoch microseconds (bigint) so the
@@ -1439,7 +1439,7 @@ def oracle_sql() -> dict[str, str]:
     """
 
     # sign-bit LSH: hyperplane component h[i][j] = ±1 from md5("i|j") — the
-    # exact expression crawlspark.datapipe.similarity.lsh_signature uses; the
+    # exact matrix crawlspark.datapipe.similarity._hyperplanes_np builds; the
     # projection is rounded to 6 dp on both sides before the sign test
     _HYPER = _hash60_sql("CAST(bit AS VARCHAR) || '|' || CAST(j AS VARCHAR)")
     o["lsh_bucket_similarity"] = f"""

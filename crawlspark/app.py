@@ -1,9 +1,8 @@
 """CrawlApp — the high-level facade (reference analog: scrapemateapp).
 
-Mirrors the reference's Config surface (/root/reference/scrapemateapp/
-config.go:17-213): concurrency, cache toggle, fetch mode (plain/js/stealth —
-here fetch-sim flavors), writers, init/seed jobs, exit-on-inactivity (the BSP
-fixpoint), proxies. Writers are true fan-out: every sink sees every result —
+Mirrors the reference's Config surface (scrapemateapp/config.go:17-213):
+concurrency, fetch mode (plain/js/stealth — here fetch-sim flavors), writers,
+init/seed jobs, proxies. Writers are true fan-out: every sink sees every result —
 a documented upgrade over the reference, whose writers *compete* on one Go
 channel so each result reaches exactly one writer
 (scrapemateapp.go:56-67; SURVEY.md §2.1 O-4).
@@ -23,14 +22,15 @@ from crawlspark.engine import CrawlConfig, CrawlEngine, CrawlRun
 
 @dataclass
 class AppConfig:
-    """Mirrors scrapemateapp.Config options (config.go:17-213)."""
+    """Mirrors the scrapemateapp.Config options (config.go:17-213) that
+    change a crawl here. The reference's cache toggle, provider choice and
+    exit-on-inactivity have no field: seen-set dedup always runs, the
+    table-backed frontier is the only provider, and the BSP loop always
+    exits at the pending-empty fixpoint (scrapemate.go:247-276)."""
 
     concurrency: int = 1          # → wave budget multiplier (worker-pool analog)
-    use_cache: bool = True        # cache.Get/Set ↔ seen-set dedup (C-1/C-2)
     fetch_mode: str = "http"      # "http" | "js" | "stealth" (fetch-sim flavors)
     n_proxies: int = 0            # F-18 round-robin column when > 0
-    provider: str = "memory"      # table-backed frontier is the only provider
-    exit_on_inactivity: bool = True  # BSP fixpoint (scrapemate.go:247-276)
     max_waves: int = C.DEFAULT_MAX_WAVES
     wave_budget: int = C.DEFAULT_WAVE_BUDGET
     default_host_budget: int = C.DEFAULT_HOST_BUDGET

@@ -17,8 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from crawlspark.datapipe.text import hash60
-
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -120,37 +118,10 @@ def cosine_topk(
     )
 
 
-def lsh_signature(vec, n_bits: int = 8, dim: int = 16):
-    """b-bit sign signature: bit i = sign(v · h_i) where hyperplane h_i has
-    deterministic ±1 components from md5(i|j) — reproducible anywhere
-    (including the DuckDB oracle). The projection is rounded to 6 dp before
-    the sign test so cross-engine float summation order can't flip a bit."""
-    # NB: the per-bit constant must be captured via a real closure — a
-    # two-parameter lambda (`lambda j, i=i`) is interpreted by F.transform as
-    # (element, index), silently replacing the bound default with the array
-    # index column and collapsing every bit onto one hyperplane (a round-1
-    # bug that only the DuckDB oracle exposed)
-    def _component(i: int):
-        return lambda j: F.when(
-            F.pmod(hash60(F.concat_ws("|", F.lit(i), j.cast("string"))), F.lit(2)) == 1,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0))
-
-    sig = F.lit(0).cast("long")
-    for i in range(n_bits):
-        comps = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), _component(i))
-        proj = F.aggregate(
-            F.zip_with(vec, comps, lambda x, h: x * h), F.lit(0.0), lambda a, x: a + x
-        )
-        sig = sig + F.when(F.round(proj, 6) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0))
-    return sig
-
-
 def _hyperplanes_np(n_bits: int, dim: int) -> "np.ndarray":
-    """The exact hyperplane matrix lsh_signature derives in Catalyst, built
-    driver-side: h[i][j] = +1 if hash60(f"{i}|{j}") is odd else -1, with
-    hash60 = int(md5[:15 hex], 16) — bit-identical to text.hash60 and to the
-    DuckDB oracle's derivation."""
+    """The LSH hyperplane matrix, built driver-side: h[i][j] = +1 if
+    hash60(f"{i}|{j}") is odd else -1, with hash60 = int(md5[:15 hex], 16) —
+    bit-identical to text.hash60 and to the DuckDB oracle's derivation."""
     import hashlib
 
     h = np.empty((n_bits, dim), dtype=np.float64)
@@ -162,11 +133,13 @@ def _hyperplanes_np(n_bits: int, dim: int) -> "np.ndarray":
 
 
 def lsh_signature_np(n_bits: int = 8, dim: int = 16):
-    """Numpy twin of lsh_signature as an Arrow-batched pandas UDF: ONE
-    matmul (batch × hyperplanes) per batch instead of n_bits × dim
-    interpreted higher-order-function ops per row (the same kernel swap as
-    cosine_topk/quantize_int8; A/B in BENCH/BASELINE.md §7). Same sign rule:
-    the projection is rounded to 6 dp before the > 0 test."""
+    """b-bit sign signature as an Arrow-batched pandas UDF: bit i =
+    sign(v · h_i) over the deterministic ±1 hyperplanes of _hyperplanes_np —
+    reproducible anywhere (including the DuckDB oracle). ONE matmul (batch ×
+    hyperplanes) per batch instead of n_bits × dim interpreted
+    higher-order-function ops per row (A/B in BENCH/BASELINE.md §7). The
+    projection is rounded to 6 dp before the > 0 test so cross-engine float
+    summation order can't flip a bit."""
     hmat = _hyperplanes_np(n_bits, dim)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
@@ -188,164 +161,24 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """IVF-flat approximate nearest neighbors: partition the corpus into
     `n_cells` cells by nearest centroid, probe the query's `n_probe` nearest
     cells, exact top-k inside the probed candidates.
 
     Centroids are sampled-k-means trained (kmeans_codebook; deterministic —
-    swapping in differently-trained centroids changes ONLY the `cents`
-    frame; the plan shape is the canonical IVF one: a broadcast argmax
+    swapping in differently-trained centroids changes ONLY the centroid
+    matrix; the plan shape is the canonical IVF one: a broadcast argmax
     assignment, a cell-key equi-join, and a per-query window over the probed
-    subset — O(corpus) shuffle instead of queries × corpus).
+    subset — O(corpus) shuffle instead of queries × corpus). Cell ids are
+    centroid indices 0..n_cells-1.
 
-    impl="numpy" (default): the argmax assignment is one matmul per Arrow
-    batch against the broadcast centroid matrix, and pair scoring after the
-    cell join is a row-wise numpy kernel — replacing ~n_cells × dim + dim
-    interpreted higher-order-function ops per row. Identical 9-dp
-    assignment rounding and tie-breaks as the HOF path and the DuckDB
-    oracle, so the answer is unchanged. impl="hof" keeps pure Catalyst.
-
-    Centroids (round 4): sampled-k-means (kmeans_codebook — hash-random
-    init + one Lloyd step), replacing the n_cells lowest-id vectors whose
-    cells skew on an id-correlated corpus; cell ids are centroid indices
-    0..n_cells-1.
+    Numpy kernels: the argmax assignment is one matmul per Arrow batch
+    against the broadcast centroid matrix, probe selection is driver-side
+    (queries are the small side), and pair scoring after the cell join is a
+    row-wise numpy kernel. Assignment is rounded to 9 dp with the DuckDB
+    oracle's tie-breaks.
     """
-    if impl == "numpy":
-        return _ivf_topk_np(corpus, queries, k, n_cells, n_probe, id_col, vec_col)
-    spark = corpus.sparkSession
-    cmat0 = kmeans_codebook(corpus, n_cells, id_col, vec_col)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cmat0)],
-        "cent_id int, cv array<double>",
-    )
-    cos_cent = _dot(F.col("v"), F.col("cv")) / (F.col("vn") * _norm(F.col("cv")))
-
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("v"), _norm(F.col(vec_col)).alias("vn")
-    )
-    # argmax-cosine cell per corpus vector; ties break to the lowest cent_id
-    # (max_by over (cos, -cent_id) structs — deterministic, oracle-matched)
-    assigned = (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("_cos", F.round(cos_cent, 9))
-        .groupBy("nbr_id", "v", "vn")
-        .agg(F.max_by("cent_id", F.struct(F.col("_cos"), (-F.col("cent_id")).alias("_t"))).alias("cell"))
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), _norm(F.col(vec_col)).alias("qn")
-    )
-    cos_q_cent = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * _norm(F.col("cv")))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("_qcos"), F.asc("cent_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("_qcos", F.round(cos_q_cent, 9))
-        .withColumn("_pr", F.row_number().over(w_probe))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "qv", "qn", F.col("cent_id").alias("cell"))
-    )
-
-    scored = (
-        probes.join(assigned, "cell")
-        .filter(F.col("query_id") != F.col("nbr_id"))
-        .withColumn("cosine", _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("vn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "nbr_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
-
-
-def quantize_int8(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    impl: str = "numpy",
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization — the storage/ANN compression
-    step of an embedding pipeline: scale = max|x|/127, q_i = round-half-up
-    (floor(x/scale + 0.5)), reconstruction x̂ = q·scale.
-
-    Row-local (zero shuffle) either way; rounding is pinned to floor(+0.5)
-    in BOTH engines because SQL round() half-rule differs between Spark
-    (HALF_UP) and others (banker's). Returns integral checksums of q plus
-    the reconstruction error so the contract is hash-comparable.
-
-    impl="numpy" (default): one Arrow-batched pandas UDF doing the whole
-    row's math as numpy array ops — Catalyst higher-order-function lambdas
-    are interpreted per ELEMENT, so the old impl="hof" path paid ~5·dim
-    interpreted calls per row (measured A/B at sf0.1 in BENCH/BASELINE.md;
-    the hof path is kept for that comparison and as the no-Arrow fallback).
-    """
-    if impl == "numpy":
-
-        @F.pandas_udf("struct<sum_q:int,max_q:int,min_q:int,recon_err:double>")
-        def _quant(vs: pd.Series) -> pd.DataFrame:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
-            amax = np.abs(mat).max(axis=1)
-            nz = amax > 0
-            scale = np.where(nz, amax / 127.0, 1.0)
-            q = np.floor(mat / scale[:, None] + 0.5).astype(np.int64)
-            q[~nz] = 0
-            err2 = ((mat - q * scale[:, None]) ** 2).sum(axis=1)
-            return pd.DataFrame(
-                {
-                    "sum_q": q.sum(axis=1).astype("int32"),
-                    "max_q": q.max(axis=1).astype("int32"),
-                    "min_q": q.min(axis=1).astype("int32"),
-                    "recon_err": np.round(np.sqrt(err2), 6),
-                }
-            )
-
-        s = _quant(F.col(vec_col))
-        return emb.select(
-            F.col(id_col).alias("vec_id"),
-            s.getField("sum_q").alias("sum_q"),
-            s.getField("max_q").alias("max_q"),
-            s.getField("min_q").alias("min_q"),
-            s.getField("recon_err").alias("recon_err"),
-        )
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    scale = amax / F.lit(127.0)
-    q = F.when(
-        amax > 0,
-        F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)).cast("int")),
-    ).otherwise(F.transform(v, lambda x: F.lit(0)))
-    err2 = F.aggregate(
-        F.zip_with(v, q, lambda x, qq: F.pow(x - qq.cast("double") * scale, F.lit(2.0))),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    return emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.aggregate(q, F.lit(0), lambda a, x: a + x).alias("sum_q"),
-        F.array_max(q).alias("max_q"),
-        F.array_min(q).alias("min_q"),
-        F.round(F.sqrt(err2), 6).alias("recon_err"),
-    )
-
-
-def _ivf_topk_np(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Numpy-kernel IVF (see ivf_topk): broadcast centroid matrix, matmul
-    cell assignment, driver-side probe selection (queries are the small
-    side), row-wise scoring kernel after the cell equi-join. Centroids are
-    sampled-k-means (round 4); cells are centroid indices 0..n_cells-1."""
     spark = corpus.sparkSession
     cmat = kmeans_codebook(corpus, n_cells, id_col, vec_col)
     cent_ids = np.arange(n_cells, dtype=np.int64)
@@ -364,7 +197,7 @@ def _ivf_topk_np(
             cos = np.round((x @ b_c.T) / np.outer(xn, b_cn), 9)
             # argmax picks the FIRST max → lowest centroid index; centroids
             # are sorted by id, so ties break to the lowest cent_id (the
-            # max_by (cos, -cent_id) convention of the HOF path + oracle)
+            # max_by (cos, -cent_id) convention of the DuckDB oracle)
             cell = b_ids[cos.argmax(axis=1)]
             yield pd.DataFrame(
                 {"nbr_id": pdf[id_col].to_numpy(), "v": pdf[vec_col].to_numpy(), "cell": cell}
@@ -414,6 +247,52 @@ def _ivf_topk_np(
             F.round("cosine", 6).alias("cosine"),
             F.col("rk").cast("int").alias("rk"),
         )
+    )
+
+
+def quantize_int8(
+    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Symmetric per-vector int8 quantization — the storage/ANN compression
+    step of an embedding pipeline: scale = max|x|/127, q_i = round-half-up
+    (floor(x/scale + 0.5)), reconstruction x̂ = q·scale.
+
+    Row-local (zero shuffle); rounding is pinned to floor(+0.5) in BOTH
+    engines because SQL round() half-rule differs between Spark (HALF_UP)
+    and others (banker's). Returns integral checksums of q plus the
+    reconstruction error so the contract is hash-comparable.
+
+    One Arrow-batched pandas UDF does the whole row's math as numpy array
+    ops — Catalyst higher-order-function lambdas are interpreted per
+    ELEMENT, ~5·dim interpreted calls per row (measured A/B at sf0.1 in
+    BENCH/BASELINE.md).
+    """
+
+    @F.pandas_udf("struct<sum_q:int,max_q:int,min_q:int,recon_err:double>")
+    def _quant(vs: pd.Series) -> pd.DataFrame:
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
+        amax = np.abs(mat).max(axis=1)
+        nz = amax > 0
+        scale = np.where(nz, amax / 127.0, 1.0)
+        q = np.floor(mat / scale[:, None] + 0.5).astype(np.int64)
+        q[~nz] = 0
+        err2 = ((mat - q * scale[:, None]) ** 2).sum(axis=1)
+        return pd.DataFrame(
+            {
+                "sum_q": q.sum(axis=1).astype("int32"),
+                "max_q": q.max(axis=1).astype("int32"),
+                "min_q": q.min(axis=1).astype("int32"),
+                "recon_err": np.round(np.sqrt(err2), 6),
+            }
+        )
+
+    s = _quant(F.col(vec_col))
+    return emb.select(
+        F.col(id_col).alias("vec_id"),
+        s.getField("sum_q").alias("sum_q"),
+        s.getField("max_q").alias("max_q"),
+        s.getField("min_q").alias("min_q"),
+        s.getField("recon_err").alias("recon_err"),
     )
 
 
@@ -663,19 +542,11 @@ def lsh_bucket_neighbors(
     dim: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Bucketed candidate pairs with exact cosine, computed only inside
     buckets — the O(n) shuffle scale path for all-pairs similarity.
-
-    impl="numpy" computes signatures with the matmul kernel
-    (lsh_signature_np); "hof" keeps the pure-Catalyst expression (the
-    DuckDB-oracle-shaped derivation both reproduce bit-for-bit)."""
-    bucket = (
-        lsh_signature_np(n_bits, dim)(F.col(vec_col))
-        if impl == "numpy"
-        else lsh_signature(F.col(vec_col), n_bits, dim)
-    )
+    Signatures come from the matmul kernel (lsh_signature_np)."""
+    bucket = lsh_signature_np(n_bits, dim)(F.col(vec_col))
     sig = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),

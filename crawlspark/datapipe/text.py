@@ -82,17 +82,6 @@ def content_fingerprint(text: Column) -> Column:
     return hash60(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")))
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("punct_ratio", F.round(punct_ratio(t), 6))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("fingerprint", content_fingerprint(t))
-    )
-
-
 # ---------------------------------------------------------------------------
 # TF-IDF (per-doc top terms — keyword extraction / doc signatures)
 # ---------------------------------------------------------------------------

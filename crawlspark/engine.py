@@ -20,7 +20,6 @@ the max-wave guard.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -57,6 +56,32 @@ TERMINAL_SCHEMA = (
 ORDER_SCHEMA = "wave int, rank long, job_id string, url_canon string, is_init boolean"
 SEEN_TBL_SCHEMA = "url_hash long, cache_key string, first_seen_wave int"
 
+# Operating envelope of the broadcast Bloom probe (round 6, r5 verdict #4):
+# prefilter_candidates ships ALL P bitsets to every executor, so the tier is
+# only probe-able while n_partitions × m_bits/8 stays executor-broadcastable.
+# Above this cap the engine auto-disables the prefilter (the exact anti-join
+# is always the authority — results are unchanged, only the shuffle-cutting
+# optimization switches off). At the north-rule 10^10 keys × 10 bits/key
+# (~12 GB) the right fix is partition-routing the probe by pmod(url_hash, P);
+# the cap makes the current broadcast probe fail SOFT instead of OOMing an
+# executor.
+BLOOM_BROADCAST_MAX_MB = 256
+
+# Execution-mode crossover (round 6, guide §1.2 "per-task work"): waves with
+# wave_budget <= this are planned in interpreted mode. Every wave's plans
+# embed wave-varying literals (wave_ts, seq watermarks, the wave number), and
+# Spark inlines primitive literals into the generated Java source, so
+# whole-stage codegen janino-RECOMPILES the wave pipeline every wave —
+# compile cost scales with PLANS (≈1s/wave measured at medium scale),
+# execution cost with ROWS. Up to this budget the engine plans its frames in
+# interpreted mode (wholeStage off, factoryMode NO_CODEGEN: identical
+# semantics, zero compile): interleaved A/B at the 50k-budget bench scale
+# reads 25.7/27.7 s wave-sum interpreted vs 31.2/29.1 codegen. Above it
+# (e.g. the 1M-row xsat waves), per-row interpreted overhead (~µs/row × ~30
+# exprs) outgrows the ~1s/wave compile and codegen stays on — the same
+# measure-first crossover reasoning as bloom_prefilter_min_seen.
+INTERPRETED_MAX_WAVE_BUDGET = 200_000
+
 
 @dataclass
 class CrawlConfig:
@@ -75,16 +100,6 @@ class CrawlConfig:
     # Below this row count the engine joins directly (the tier is still
     # built + checkpointed either way — membership answers don't change).
     bloom_prefilter_min_seen: int = 2_000_000
-    # operating envelope of the broadcast probe (round 6, r5 verdict #4):
-    # prefilter_candidates ships ALL P bitsets to every executor, so the
-    # tier is only probe-able while n_partitions × m_bits/8 stays
-    # executor-broadcastable. Above this cap the engine auto-disables the
-    # prefilter (the exact anti-join is always the authority — results are
-    # unchanged, only the shuffle-cutting optimization switches off). At the
-    # north-rule 10^10 keys × 10 bits/key (~12 GB) the right fix is
-    # partition-routing the probe by pmod(url_hash, P); the cap makes the
-    # current broadcast probe fail SOFT instead of OOMing an executor.
-    bloom_broadcast_max_mb: int = 256
     # P-2 job-type registry (name → jobtypes.JobTypeSpec); None → the single
     # default type, which reproduces untyped crawls bit-for-bit
     job_types: dict | None = None
@@ -112,20 +127,6 @@ class CrawlConfig:
     payload_mode: str = "table"
     payload_px: int = 128  # synthetic-mode image edge length
     workdir: str | None = None  # set → durable checkpoints + resume
-    # Execution-mode crossover (round 6, guide §1.2 "per-task work"): every
-    # wave's plans embed wave-varying literals (wave_ts, seq watermarks, the
-    # wave number), and Spark inlines primitive literals into the generated
-    # Java source, so whole-stage codegen janino-RECOMPILES the wave pipeline
-    # every wave — compile cost scales with PLANS (≈1s/wave measured at
-    # medium scale), execution cost with ROWS. Below this wave_budget the
-    # engine plans its frames in interpreted mode (wholeStage off,
-    # factoryMode NO_CODEGEN: identical semantics, zero compile): interleaved
-    # A/B at the 50k-budget bench scale reads 25.7/27.7 s wave-sum
-    # interpreted vs 31.2/29.1 codegen. Above it (e.g. the 1M-row xsat
-    # waves), per-row interpreted overhead (~µs/row × ~30 exprs) outgrows
-    # the ~1s/wave compile and codegen stays on — the same measure-first
-    # crossover reasoning as bloom_prefilter_min_seen.
-    interpreted_below_wave_budget: int = 200_000
 
 
 @dataclass
@@ -191,14 +192,8 @@ class CrawlEngine:
         self._n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self._seen_chain = 0
         self._n_seed_allowed = 0
-        self._profile = os.environ.get("CRAWLSPARK_PROFILE") == "1"
-        # A/B escape hatch: "1" compiles the per-wave checkpoint plans with
-        # AQE disabled (the rejected round-4 experiment) — kept only so
-        # bench/run_ab_ckpt.py can re-measure it; the default (AQE-compiled)
-        # won the interleaved A/B 4/4 pairs (BENCH/ab_r4_ckpt.json, B/A=0.80)
-        self._ckpt_static = os.environ.get("CRAWLSPARK_CKPT_STATIC") == "1"
-        self._t_last = 0.0
         self._seen_rows = 0  # driver-side running count (no extra actions)
+        self._bloom_synced = False  # tier caught up with the seen set
         self.bloom = (
             SEEN.PartitionedBloom(self.cfg.bloom_partitions, self.cfg.bloom_bits)
             if self.cfg.use_bloom
@@ -207,32 +202,30 @@ class CrawlEngine:
 
     def _bloom_broadcastable(self) -> bool:
         """True while the tier's total packed size fits the broadcast-probe
-        envelope (bloom_broadcast_max_mb). The exact anti-join never depends
+        envelope (BLOOM_BROADCAST_MAX_MB). The exact anti-join never depends
         on this — past the cap the prefilter just switches off."""
         if self.bloom is None:
             return False
         tier_bytes = self.bloom.n_partitions * (self.bloom.m_bits // 8)
-        return tier_bytes <= self.cfg.bloom_broadcast_max_mb * 1024 * 1024
+        return tier_bytes <= BLOOM_BROADCAST_MAX_MB * 1024 * 1024
 
-    def _bloom_maintain(self, seen_full, seen_delta) -> None:
+    def _bloom_maintain(self, seen_full) -> None:
         """Build the bloom tier only once the seen set is big enough for the
         prefilter to pay for itself: construction is deferred, then a
         one-time full build catches up. After that sync, per-wave deltas
-        ride the fused action's `bloom` branch (zero extra driver jobs) —
-        this method's delta path is only a fallback for callers that bypass
-        the BSP loop (`seen_delta` kept in the signature for them)."""
+        ride the fused action's `bloom` branch (zero extra driver jobs)."""
         if self.bloom is None:
             return
         if self._seen_rows < self.cfg.bloom_prefilter_min_seen // 2:
             self._bloom_synced = False
             return
-        if not getattr(self, "_bloom_synced", False):
+        if not self._bloom_synced:
             self.bloom.add_from_df(seen_full)
             self._bloom_synced = True
 
     def exec_mode(self):
         """Context manager applying the engine's execution-mode choice
-        (CrawlConfig.interpreted_below_wave_budget): small-wave runs plan in
+        (INTERPRETED_MAX_WAVE_BUDGET): small-wave runs plan in
         interpreted mode so the per-wave janino recompile of literal-bearing
         plans disappears; big-wave runs keep codegen. run() wraps the BSP
         loop in this; callers that materialize a CrawlRun's lazy outputs
@@ -243,7 +236,7 @@ class CrawlEngine:
         @contextmanager
         def _cm():
             conf = self.spark.conf
-            if self.cfg.wave_budget > self.cfg.interpreted_below_wave_budget:
+            if self.cfg.wave_budget > INTERPRETED_MAX_WAVE_BUDGET:
                 yield
                 return
             prev_ws = conf.get("spark.sql.codegen.wholeStage", "true")
@@ -269,23 +262,6 @@ class CrawlEngine:
                 if a == attempts - 1:
                     raise
                 time.sleep(delay_s)
-
-    def _tick(self, label: str, wave: int) -> None:
-        if self._profile:
-            now = time.monotonic()
-            st = self.spark.sparkContext.statusTracker()
-            jobs = st.getJobIdsForGroup(f"wave-{wave}")
-            n_stages = 0
-            for j in jobs:
-                ji = st.getJobInfo(j)
-                if ji is not None:
-                    n_stages += len(ji.stageIds)
-            print(
-                f"[profile] wave={wave} {label}: {now - self._t_last:.2f}s "
-                f"(cum jobs={len(jobs)} stages={n_stages})",
-                flush=True,
-            )
-            self._t_last = now
 
     # ------------------------------------------------------------------ #
     def _admit_seeds(self, seeds: DataFrame):
@@ -608,10 +584,9 @@ class CrawlEngine:
         to re-plan the wave's downstream joins/aggregations, and losing
         that (plus the checkpoint work no longer overlapping the wave
         boundary) costs more than the per-cut barrier saves. Verdict:
-        keep AQE; CRAWLSPARK_CKPT_STATIC=1 preserves the losing arm for
-        re-measurement only.
+        keep AQE.
 
-        `keep_layout` (round 5): compile THIS cut statically so the
+        `keep_layout` (round 5): compile THIS cut statically (_cut_lazy) so the
         checkpointed frame keeps its physical layout metadata. Under AQE the
         compiled plan is an AdaptiveSparkPlanExec whose outputPartitioning /
         outputOrdering are still Unknown at compile time, so the LogicalRDD
@@ -628,14 +603,8 @@ class CrawlEngine:
         if self.io:
             self.io.write_wave(df, table, wave)
             return self.io.read_wave(table, wave)
-        if self._ckpt_static or keep_layout:
-            conf = self.spark.conf
-            prev = conf.get("spark.sql.adaptive.enabled", "true")
-            try:
-                conf.set("spark.sql.adaptive.enabled", "false")
-                return df.localCheckpoint(eager=False)
-            finally:
-                conf.set("spark.sql.adaptive.enabled", prev)
+        if keep_layout:
+            return self._cut_lazy(df)
         return df.localCheckpoint(eager=False)
 
     # ------------------------------------------------------------------ #
@@ -717,7 +686,7 @@ class CrawlEngine:
             n_init_pending = manifest.get("n_init_pending")
             if n_init_pending is None:
                 n_init_pending = pending.filter("is_init").count() if "is_init" in pending.columns else 0
-            self._bloom_maintain(seen, seen)  # rebuild tier from committed seen set
+            self._bloom_maintain(seen)  # rebuild tier from committed seen set
         else:
             wave = 0
             stopped = False
@@ -755,7 +724,7 @@ class CrawlEngine:
             # how many seeds open an init BFS phase (F-5, scrapemate.go:489-523)
             n_init_pending = int(srows["p"]["n_init"] or 0)
             self._seen_rows = int(srows["s"]["n"])
-            self._bloom_maintain(seen, seen)
+            self._bloom_maintain(seen)
             if self.io:
                 self.io.commit_manifest(
                     {"wave": 0, "seq_base": seq_base, "stopped": False,
@@ -768,9 +737,8 @@ class CrawlEngine:
             wave += 1
             wave_ts = wave * cfg.wave_period_us
             wt0 = time.monotonic()
-            self._t_last = wt0
-            # tag the wave's jobs (UI debuggability; also lets the profile
-            # mode count scheduler round-trips per wave via statusTracker)
+            # tag the wave's jobs (UI debuggability; also lets an event-log
+            # reader count scheduler round-trips per wave)
             spark.sparkContext.setJobGroup(f"wave-{wave}", f"crawl wave {wave}")
 
             # F-5 init phase: while any init job is pending, ONLY init jobs
@@ -914,7 +882,7 @@ class CrawlEngine:
             # 1-3 s driver round-trip per wave (pure serial floor, and the
             # main per-wave cost growth once the tier engages), now it
             # overlaps the stages the wave already runs.
-            bloom_live = self.bloom is not None and getattr(self, "_bloom_synced", False)
+            bloom_live = self.bloom is not None and self._bloom_synced
             if bloom_live:
                 bloom_agg = self.bloom.delta_agg_df(
                     parted.filter(F.col("_fresh")).select("url_hash")
@@ -923,12 +891,6 @@ class CrawlEngine:
                     bloom_agg.withColumn("_kind", F.lit("bloom")),
                     allowMissingColumns=True,
                 )
-            if self._profile and wave == int(
-                os.environ.get("CRAWLSPARK_EXPLAIN_WAVE", "0")
-            ):
-                # plan-shape debugging: dump the wave's single fused action
-                print(f"=== fused plan, wave {wave} ===", flush=True)
-                fused.explain("formatted")
             rows = self._retry_action(fused.collect)
             oc_rows = [r for r in rows if r["_kind"] == "oc"]
             ex_stats = [r for r in rows if r["_kind"] == "ex"]
@@ -943,7 +905,6 @@ class CrawlEngine:
                     if r["outcome"] == "retry":
                         n_retried_init += r["n"]
             n_sched = sum(by_outcome.values())
-            self._tick("select+fetch+outcomes", wave)
             if n_sched == 0:
                 wave_sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
                 src = pending.filter("is_init") if init_phase else pending
@@ -1006,7 +967,6 @@ class CrawlEngine:
              n_candidates, n_new, n_allowed_init) = (
                 self._expand_finish(parted, ex_stats, wave, wave_ts, seq_base)
             )
-            self._tick("expand", wave)
             # Both cuts compile statically (keep_layout): under AQE,
             # localCheckpoint(eager=False) materializes the cut's non-final
             # query stages at COMPILE time — ~2 s of serial driver floor per
@@ -1052,9 +1012,8 @@ class CrawlEngine:
                 self._n_shuffle, "host_bucket"
             ).sortWithinPartitions("priority", "seq")
             pending = self._materialize(new_pending, "pending", wave, keep_layout=True)
-            self._tick("mat-pending", wave)
             seen = seen.unionByName(seen_delta)  # both sides already materialized
-            self._bloom_maintain(seen, seen_delta)
+            self._bloom_maintain(seen)
             self._seen_chain += 1
             if self._seen_chain >= 8:
                 # periodic compaction (the Nutch CrawlDb-merge analog): bound
@@ -1063,7 +1022,6 @@ class CrawlEngine:
                     seen.repartition(self._n_shuffle, "url_hash"), "seen_full", wave
                 )
                 self._seen_chain = 0
-            self._tick("bloom", wave)
 
             # wave outputs stay LAZY over the persisted `out`/`cand` frames in
             # memory mode (one final union at end-of-run); durable mode writes

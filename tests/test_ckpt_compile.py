@@ -1,30 +1,26 @@
-"""Pin the wave-checkpoint compilation default decided by the round-4 A/B.
+"""Pin the engine's compile-mode defaults: checkpoint cuts and codegen.
 
 The interleaved full-loop A/B (BENCH/ab_r4_ckpt.json: AQE-compiled won 4/4
 pairs, median B/A = 0.80) fixed the default at AQE-compiled lazy
-localCheckpoints; the static-compile arm survives only behind
-CRAWLSPARK_CKPT_STATIC=1 for re-measurement. These tests make the decision
-regression-proof: the default must NOT touch the session's AQE conf, the
-escape hatch must restore it, and both compile modes must produce the same
-crawl (the A/B measured wall time only because outputs are pinned equal).
+localCheckpoints, so the default cut must NOT touch the session's AQE conf.
+exec_mode() plans waves with wave_budget <= INTERPRETED_MAX_WAVE_BUDGET in
+interpreted mode and must restore the session's codegen confs on exit.
 """
-
-import os
 
 import pytest
 
 from crawlspark import synth
-from crawlspark.engine import CrawlConfig, CrawlEngine
+from crawlspark.engine import INTERPRETED_MAX_WAVE_BUDGET, CrawlConfig, CrawlEngine
 
 
-def _engine(spark, world, **cfg_kwargs):
+def _engine(spark, world, wave_budget):
     return CrawlEngine(
         spark,
         pages=synth.pages_df(spark, world),
         robots=synth.robots_df(spark, world),
         budgets=synth.politeness_df(spark, world),
         images=None,
-        config=CrawlConfig(validate_images=False, **cfg_kwargs),
+        config=CrawlConfig(validate_images=False, wave_budget=wave_budget),
     )
 
 
@@ -35,7 +31,6 @@ def world():
 
 def test_default_materialize_keeps_aqe_untouched(spark, world):
     eng = _engine(spark, world, wave_budget=30)
-    assert eng._ckpt_static is False
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     df = synth.seeds_df(spark, world)
     cut = eng._materialize(df, "pending", 0)
@@ -43,30 +38,22 @@ def test_default_materialize_keeps_aqe_untouched(spark, world):
     assert cut.count() == df.count()
 
 
-def test_static_escape_hatch_restores_conf(spark, world, monkeypatch):
-    monkeypatch.setenv("CRAWLSPARK_CKPT_STATIC", "1")
-    eng = _engine(spark, world, wave_budget=30)
-    assert eng._ckpt_static is True
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    df = synth.seeds_df(spark, world)
-    cut = eng._materialize(df, "pending", 0)
-    # the static compile toggles AQE off only around the checkpoint call
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev
-    assert cut.count() == df.count()
-
-
-def test_both_compile_modes_same_crawl(spark, world, monkeypatch):
-    runs = {}
-    for static in (False, True):
-        if static:
-            monkeypatch.setenv("CRAWLSPARK_CKPT_STATIC", "1")
+@pytest.mark.parametrize(
+    "wave_budget, interpreted",
+    [(INTERPRETED_MAX_WAVE_BUDGET, True), (INTERPRETED_MAX_WAVE_BUDGET + 1, False)],
+)
+def test_exec_mode_crossover_sets_and_restores_codegen(spark, world, wave_budget, interpreted):
+    assert INTERPRETED_MAX_WAVE_BUDGET == 200_000
+    conf = spark.conf
+    prev_ws = conf.get("spark.sql.codegen.wholeStage")
+    prev_fm = conf.get("spark.sql.codegen.factoryMode")
+    eng = _engine(spark, world, wave_budget)
+    with eng.exec_mode():
+        if interpreted:
+            assert conf.get("spark.sql.codegen.wholeStage") == "false"
+            assert conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
         else:
-            monkeypatch.delenv("CRAWLSPARK_CKPT_STATIC", raising=False)
-        eng = _engine(spark, world, wave_budget=25)
-        run = eng.run(synth.seeds_df(spark, world))
-        runs[static] = [
-            (r.wave, r.rank, r.job_id, r.url_canon)
-            for r in run.order.orderBy("wave", "rank").collect()
-        ]
-    assert runs[False] == runs[True]
-    monkeypatch.delenv("CRAWLSPARK_CKPT_STATIC", raising=False)
+            assert conf.get("spark.sql.codegen.wholeStage") == prev_ws
+            assert conf.get("spark.sql.codegen.factoryMode") == prev_fm
+    assert conf.get("spark.sql.codegen.wholeStage") == prev_ws
+    assert conf.get("spark.sql.codegen.factoryMode") == prev_fm
