@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawlspark.datapipe.text import hash60
+from crawlspark.frontier import _offset_rank, _range_parted
 
 
 def stratified_sample(
@@ -40,41 +41,17 @@ def scan_cumsum(
 ) -> DataFrame:
     """Inclusive running sum of `value_col` in global `order_col` order,
     WITHOUT a global-order window (which funnels the corpus through one
-    task): repartitionByRange on the order key → per-partition running sum →
-    + broadcast partition-offset join. Same two-phase shape as
-    frontier.with_inspark_rank; one range shuffle, fully lazy."""
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parted = df.repartitionByRange(n_parts, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # persisted until the caller's action completes — released by
-    # datapipe.release_caches (module-docstring cache contract)
-    parted = parted.withColumn("_local", F.sum(value_col).over(w_local)).persist()
-    offsets = (
-        parted.groupBy("_pid")
-        .agg(F.sum(value_col).alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(cum_col, (F.col("_local") + F.col("_off")).cast("long"))
-        .drop("_pid", "_local", "_off")
+    task): frontier's distributed rank with a summed value column — range
+    partitioning on the order key, per-partition running sum, plus the
+    broadcast prefix-summed partition totals. One range shuffle, fully lazy.
+    The range-partitioned frame stays persisted until the caller's action
+    completes; datapipe.release_caches frees it (module-docstring cache
+    contract)."""
+    return _offset_rank(
+        _range_parted(df, [order_col], n_parts),
+        [order_col],
+        cum_col,
+        value=value_col,
     )
 
 

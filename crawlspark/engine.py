@@ -295,15 +295,15 @@ class CrawlEngine:
         s = s.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
         allowed, blocked = politeness.robots_gate(s, self.robots)
-        # Round 6 (second pass): the seed rank is LAZY (with_inspark_rank) —
-        # the old with_global_rank paid a dedicated persist + driver collect
-        # inside the timed wall just to number ≤ n_seeds rows. For the unique
-        # seed_order key both forms compute the identical global rank
-        # (rank-within-partition + preceding-partition offsets is partition-
-        # boundary-independent), and the seed/seen counts the driver needs
-        # ride ONE fused aggregate in run() instead of three sequential
-        # actions (same union-by-_kind trick as the per-wave fused action).
-        allowed = frontier.with_inspark_rank(allowed, ("seed_order",), "_srank")
+        # The seed rank is lazy — no driver action: the seed/seen counts the
+        # driver needs ride ONE fused aggregate in run() (same union-by-_kind
+        # trick as the per-wave fused action). Its shared range-partitioned
+        # frame is an RDD-leaf cut like every wave's rank (see _cut_lazy),
+        # so it is GC-cleaned instead of staying persisted for the session,
+        # and both consumers read the same once-sampled range partitioning.
+        allowed = frontier.with_inspark_rank(
+            allowed, ("seed_order",), "_srank", materialize=self._cut_lazy
+        )
         pending = (
             allowed.withColumn("seq", (F.col("_srank") - 1).cast("long"))
             .withColumn("parent_id", F.lit(None).cast("string"))
@@ -676,6 +676,7 @@ class CrawlEngine:
                     ("order", order_parts),
                     ("results", results_parts),
                     ("terminal", terminal_parts),
+                    ("responses", responses_parts),
                 ):
                     if self.io.wave_exists(tbl, w0):
                         parts.append(self.io.read_wave(tbl, w0))
@@ -967,13 +968,13 @@ class CrawlEngine:
              n_candidates, n_new, n_allowed_init) = (
                 self._expand_finish(parted, ex_stats, wave, wave_ts, seq_base)
             )
-            # Both cuts compile statically (keep_layout): under AQE,
-            # localCheckpoint(eager=False) materializes the cut's non-final
-            # query stages at COMPILE time — ~2 s of serial driver floor per
-            # wave on frames whose downstream is unions and explicitly-
-            # hinted joins only, i.e. nothing AQE's runtime stats would
-            # re-plan (profile: the mat-pending leg, 10 jobs/wave).
-            admitted = self._materialize(admitted, "admitted", wave, keep_layout=True)
+            # `admitted` gets no cut of its own: it only feeds the pending
+            # snapshot below, which is cut. The seen and pending cuts compile
+            # statically (keep_layout): under AQE, localCheckpoint(eager=False)
+            # materializes the cut's non-final query stages at COMPILE time —
+            # ~2 s of serial driver floor per wave on frames whose downstream
+            # is unions and explicitly-hinted joins only, i.e. nothing AQE's
+            # runtime stats would re-plan.
             # narrow each seen delta before it enters the probe-side union
             # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
             # set the shuffle width is sized for), yet at full width the

@@ -1,14 +1,17 @@
-"""Frontier operators: deterministic seq/rank assignment and wave selection.
+"""Frontier operators: deterministic global rank and wave selection.
 
 Reference analogs: Push/Jobs of the memory provider
 (/root/reference/adapters/providers/memory/memory.go:29-98) — strict priority
 0>1>2 with FIFO within a level — re-expressed as sorts over a frontier table.
 
 Scale notes (the parts a naive port gets wrong at 10^10 rows):
-  * Global rank is NEVER a single-partition window. `with_global_rank` range-
-    partitions on the sort key, ranks within partitions, and adds per-partition
-    offsets (driver sees only P counts). Deterministic regardless of the
-    physical partition boundaries.
+  * Global rank is NEVER a single-partition window. Every rank here is one
+    algorithm, `_offset_rank`: rank within each partition, then add the
+    prefix-summed counts of the partitions before it (a tiny aggregate,
+    broadcast back). The public names differ only in how a row gets its
+    partition id `_pid`: range partitioning (`with_inspark_rank`,
+    `ranked_within`, datapipe.sampling.scan_cumsum) or a caller-supplied
+    order-preserving bucket (`with_inspark_rank_bucketed`).
   * `monotonically_increasing_id` is banned — it depends on partition layout,
     so a retried stage could renumber the frontier (SURVEY.md §7.5.1).
 """
@@ -30,75 +33,73 @@ def normalize_priority(col):
     ).cast("int")
 
 
-def with_global_rank(
-    df: DataFrame, order_cols=ORDER_COLS, rank_col: str = "rank", n_parts: int | None = None
-):
-    """1-based dense global rank by `order_cols`, without a global window.
-
-    Plan: repartitionByRange(order_cols) → per-partition row_number →
-    + cumulative offset of preceding partitions (P-row driver aggregate,
-    broadcast back). Wall-clock is one range shuffle; no single-task sort.
-
-    Returns (ranked_df, total_rows) — the total falls out of the offset
-    collect for free, so callers never need a separate count().
-    """
-    spark = df.sparkSession
+def _n_parts(df: DataFrame, n_parts: int | None) -> int:
     if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *cols).withColumn(
+        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return n_parts
+
+
+def _range_parted(df: DataFrame, cols, n_parts: int | None) -> DataFrame:
+    """Range-partition on `cols`; `_pid` is the physical partition index, so
+    partition order is key order."""
+    return df.repartitionByRange(_n_parts(df, n_parts), *cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    parted = parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
-    ).persist()  # the count-collect below and the join both consume it
-    counts = {r["_pid"]: r["n"] for r in parted.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, 0)], "_pid int, _off long"
-    )
-    ranked = (
-        parted.join(F.broadcast(offset_df), "_pid")
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-    return ranked, acc
 
 
-def with_inspark_rank(
-    df: DataFrame, order_cols=ORDER_COLS, rank_col: str = "rank", n_parts: int | None = None
+def _offset_rank(
+    parted: DataFrame,
+    order,
+    out_col: str,
+    *,
+    groups=(),
+    lead=(),
+    value=None,
+    materialize=None,
 ) -> DataFrame:
-    """Like with_global_rank but with NO driver action: the per-partition
-    offsets are a running-sum window over the tiny (≤ n_parts rows) count
-    aggregate, broadcast-joined back. The whole rank is one lazy plan, so it
-    fuses into whichever downstream action consumes it — this is what lets a
-    BSP wave run with only two driver round-trips (engine.run)."""
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    # persist: both the offsets subplan (broadcast side) and the main join
-    # consume this frame — without a cache the whole upstream (politeness
-    # windows, eligibility scan) runs twice per wave
-    parted = parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
-    ).persist()
+    """The one distributed-rank algorithm: a running count — or, with
+    `value`, a running sum of that column — in (lead, _pid, order) order
+    within each `groups` value, without a window over the whole frame.
+
+    `parted` carries `_pid`, which must be monotone in that order within
+    each (groups, lead) value: every row of `_pid` p sorts before every row
+    of p+1. Then
+
+      _rn  = running count/sum within (_pid, groups, lead), ordered by `order`
+      _off = per-(_pid, groups, lead) totals, prefix-summed in (lead, _pid)
+             order within each `groups` value — a window over an aggregate
+             of at most n_parts rows per (groups, lead) value
+      out  = _rn + _off, the offsets broadcast-joined back.
+
+    Fully lazy, no driver action. `parted` feeds both the offsets aggregate
+    and the join, so it is cut once: by `materialize` when given, else by
+    .persist() (released by datapipe.release_caches). The engine passes its
+    RDD-leaf cut (engine._cut_lazy): the self-join makes the analyzer
+    rewrite the offsets side's attribute ids, after which the cache manager
+    no longer matches a persisted plan there and that side recomputes the
+    upstream; an RDD leaf survives the rewrite, and the context cleaner
+    frees it once the caller drops the frame."""
+    keys = ["_pid", *groups, *lead]
+    w = Window.partitionBy(*keys).orderBy(*order)
+    if value is None:
+        running, total = F.row_number().over(w), F.count("*")
+    else:
+        running = F.sum(value).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        total = F.sum(value)
+    parted = parted.withColumn("_rn", running)
+    parted = materialize(parted) if materialize is not None else parted.persist()
     offsets = (
-        parted.groupBy("_pid")
-        .agg(F.count("*").alias("_n"))
+        parted.groupBy(*keys)
+        .agg(total.alias("_n"))
         .withColumn(
             "_off",
             F.coalesce(
                 F.sum("_n").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
+                    Window.partitionBy(*groups)
+                    .orderBy(*lead, "_pid")
+                    .rowsBetween(Window.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ),
@@ -106,9 +107,27 @@ def with_inspark_rank(
         .drop("_n")
     )
     return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
+        parted.join(F.broadcast(offsets), keys)
+        .withColumn(out_col, (F.col("_rn") + F.col("_off")).cast("long"))
         .drop("_pid", "_rn", "_off")
+    )
+
+
+def with_inspark_rank(
+    df: DataFrame,
+    order_cols=ORDER_COLS,
+    rank_col: str = "rank",
+    n_parts: int | None = None,
+    materialize=None,
+) -> DataFrame:
+    """1-based global rank by `order_cols`: `_offset_rank` over a range
+    partitioning on `order_cols`. One lazy plan, so it fuses into whichever
+    downstream action consumes it. `materialize`: see `_offset_rank`."""
+    return _offset_rank(
+        _range_parted(df, order_cols, n_parts),
+        order_cols,
+        rank_col,
+        materialize=materialize,
     )
 
 
@@ -127,16 +146,11 @@ def with_inspark_rank_bucketed(
     not match rangepartitioning. Here the caller supplies `bucket_col` — a
     pure row function that must be MONOTONE NON-DECREASING in `seq` within
     each priority value (the engine derives one from its driver-tracked seq
-    watermarks; any clamped linear map of seq qualifies). Then:
-
-      _rn      = row_number within (_pid, priority) ordered by seq
-      offsets  = per-(_pid, priority) counts, prefix-summed in
-                 (priority, _pid) order — correct because bucket monotonicity
-                 in seq within a priority means every row of (p, b) sorts
-                 before every row of (p, b+1), and priority-major order
-                 handles the rest. The aggregate is ≤ 3·n_parts rows, so the
-                 single-partition prefix window is driver-trivial.
-      rank     = _rn + offset, broadcast-joined back.
+    watermarks; any clamped linear map of seq qualifies) — as `_pid`, and
+    `_offset_rank` runs with `lead=("priority",)`: offsets prefix-sum in
+    (priority, _pid) order, correct because bucket monotonicity in seq
+    within a priority means every row of (p, b) sorts before every row of
+    (p, b+1), and priority-major order handles the rest.
 
     One exchange total; the window, the count aggregate, and the join all
     ride it. Deterministic under stage retry (the bucket is a row function;
@@ -145,44 +159,11 @@ def with_inspark_rank_bucketed(
     a FIFO-draining frontier and degrades only by crowding stragglers into
     bucket 0 (clamped), never by breaking order.
     """
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parted = df.withColumn("_pid", bucket_col).repartition(n_parts, "_pid")
-    # shared by the offsets broadcast subplan AND the main join — without a
-    # cut the whole upstream (politeness windows, eligibility scan) runs
-    # twice. `materialize` (the engine passes a lazy RDD-leaf cut) is
-    # preferred over .persist(): the self-join below makes the analyzer
-    # rewrite the offsets side's attribute ids, after which the cache
-    # manager no longer matches the persisted plan on that side and the
-    # offsets subplan recomputes the upstream from scratch (observed on the
-    # live wave plan). An RDD leaf survives the rewrite — renamed
-    # attributes still bind to the same checkpointed RDD.
-    parted = parted.withColumn(
-        "_rn",
-        F.row_number().over(Window.partitionBy("_pid", "priority").orderBy("seq")),
+    parted = df.withColumn("_pid", bucket_col).repartition(
+        _n_parts(df, n_parts), "_pid"
     )
-    parted = materialize(parted) if materialize is not None else parted.persist()
-    offsets = (
-        parted.groupBy("_pid", "priority")
-        .agg(F.count("*").alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("priority", "_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), ["_pid", "priority"])
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
+    return _offset_rank(
+        parted, ("seq",), rank_col, lead=("priority",), materialize=materialize
     )
 
 
@@ -192,41 +173,13 @@ def ranked_within(
     """row_number() within `part_cols` WITHOUT funnelling each group through
     one task. A plain Window.partitionBy(priority) with 3 priority values is
     three single-task sorts of N/3 rows — at 100× one executor sorts 10^9
-    rows. Here: range-partition on (part_cols, order_cols), rank within
-    (physical partition, group), then add per-(partition, group) offsets
-    computed from a tiny count aggregate — all lazy, no driver action."""
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pcols = [F.col(c) for c in part_cols]
-    ocols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *pcols, *ocols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    # persist — shared by the offsets broadcast subplan and the main join
-    parted = parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid", *pcols).orderBy(*ocols))
-    ).persist()
-    offsets = (
-        parted.groupBy("_pid", *pcols)
-        .agg(F.count("*").alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.partitionBy(*pcols)
-                    .orderBy("_pid")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), ["_pid", *part_cols])
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
+    rows. Here: `_offset_rank` with `groups=part_cols` over a range
+    partitioning on (part_cols, order_cols) — all lazy, no driver action."""
+    return _offset_rank(
+        _range_parted(df, [*part_cols, *order_cols], n_parts),
+        order_cols,
+        rank_col,
+        groups=part_cols,
     )
 
 
@@ -251,5 +204,7 @@ def select_wave(
             eligible_polite, seq_bucket, "rank", materialize=materialize
         )
     else:
-        ranked = with_inspark_rank(eligible_polite, ORDER_COLS, "rank")
+        ranked = with_inspark_rank(
+            eligible_polite, ORDER_COLS, "rank", materialize=materialize
+        )
     return ranked.filter(F.col("rank") <= wave_budget)

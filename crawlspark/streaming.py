@@ -18,63 +18,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-ADMIT_SCHEMA = (
-    "host string, job_id string, priority int, seq long, admitted boolean"
-)
-STATE_SCHEMA = "used int"
-
-
-def admit_with_budget(budget_per_host: int):
-    """Stateful admission: first `budget_per_host` jobs per host (by arrival
-    batch, (priority, seq) within a batch) pass; the rest are deferred.
-    State survives across micro-batches — the streaming analog of the
-    engine's per-wave per-host top-k window.
-
-    Vectorized: budget admission after the sort is a prefix count —
-    admitted[i] ⇔ used + i < budget — so each Arrow batch is one numpy
-    expression, never a per-row Python loop (BASELINE.json input_hint).
-
-    The chunk iterator is CONCATENATED before sorting: Arrow splits a host
-    group larger than maxRecordsPerBatch into several pdfs, and sorting each
-    chunk independently would admit out of global (priority, seq) order
-    (round-3 advice). The concat bounds memory at one host's micro-batch —
-    the same per-host-group bound applyInPandasWithState already implies."""
-    import numpy as np
-
-    def fn(key, pdfs, state: GroupState):
-        (host,) = key
-        used = state.get[0] if state.exists else 0
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["priority", "seq"])
-            admitted = used + np.arange(len(pdf)) < budget_per_host
-            used += int(admitted.sum())
-            yield pd.DataFrame(
-                {
-                    "host": host,
-                    "job_id": pdf["job_id"].to_numpy(),
-                    "priority": pdf["priority"].astype("int32").to_numpy(),
-                    "seq": pdf["seq"].astype("int64").to_numpy(),
-                    "admitted": admitted,
-                }
-            )
-        state.update((used,))
-
-    return fn
-
-
 def politeness_stream(jobs_stream: DataFrame, budget_per_host: int) -> DataFrame:
-    """jobs_stream: streaming frame with (host, job_id, priority, seq)."""
-    return (
-        jobs_stream.groupBy("host")
-        .applyInPandasWithState(
-            admit_with_budget(budget_per_host),
-            outputStructType=ADMIT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    """Cumulative per-host budget: the first `budget_per_host` jobs per host
+    (by arrival batch, (priority, seq) within a batch) pass; the rest are
+    deferred. jobs_stream: streaming frame with (host, job_id, priority, seq);
+    all its columns pass through plus `admitted`. This is
+    politeness_stream_windowed over one constant window — the per-host
+    counter never resets — so it shares that path's max_buffer_rows guard."""
+    return politeness_stream_windowed(
+        jobs_stream.withColumn("_window", F.lit(0)),
+        budget_per_host,
+        window_col="_window",
+    ).drop("_window")
 
 
 def _admit_host_group(
@@ -118,8 +73,8 @@ def _admit_host_group(
                 f"buffered; shrink the per-trigger slice "
                 f"(maxFilesPerTrigger / maxOffsetsPerTrigger), raise "
                 f"max_buffer_rows if the executor has headroom, or pre-cap "
-                f"the host upstream (the batch engine's admit_with_budget "
-                f"rank prunes to the budget before any buffering)."
+                f"the host upstream (the batch engine's per-host top-k "
+                f"window prunes to the budget before any buffering)."
             )
         buffered.append(c)
     chunks = buffered
@@ -160,8 +115,7 @@ def politeness_stream_windowed(
     before the (window, priority, seq) sort — Arrow splits a host group
     bigger than maxRecordsPerBatch into several pdfs, and a per-chunk sort
     would admit out of global order (round-3 advice). Admission inside each
-    window is a vectorized prefix count, the same zero-loop shape as
-    admit_with_budget.
+    window is a vectorized prefix count, never a per-row Python loop.
 
     Memory bound (round 5, enforced): the concat buffers ONE HOST's
     micro-batch, the operator's only memory that grows with input skew.

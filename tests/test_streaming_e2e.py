@@ -196,7 +196,7 @@ def test_streaming_pipeline_matches_batch_admission(spark, pipeline_world, tmp_p
 
 def test_windowed_budget_resets_per_wave(spark, tmp_path):
     # one host, budget 2, three jobs per wave: waves must each admit 2
-    # (reset), not 2-then-0 (the cumulative admit_with_budget semantics)
+    # (reset), not 2-then-0 (the cumulative politeness_stream semantics)
     rows = [
         (f"j{w}{i}", f"http://a.test/{w}/{i}", i, f"k{w}{i}", "a.test", 0, i, w, 0, 200, 299, None, 2)
         for w in (1, 2)
